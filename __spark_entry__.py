@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,8 +52,8 @@ def _ship_package(spark: SparkSession) -> None:
                         full = os.path.join(root, fn)
                         zf.write(full, os.path.relpath(full, _REPO))
         sc.addPyFile(zpath)
-    except Exception:
-        pass  # best effort; normal PYTHONPATH setups never need this
+    except Exception as e:  # normal PYTHONPATH setups never need this
+        warnings.warn(f"could not ship finporter_spark to workers: {e!r}")
 
 
 def _wrap(fn):

@@ -39,7 +39,13 @@ from finporter_spark.model import (
     ENTITY_KEYS,
     ENTITY_SCHEMAS,
 )
-from finporter_spark.sources import quarantine_split, read_delimited
+from finporter_spark.sources import (
+    CORRUPT_COL,
+    quarantine_split,
+    raw_schema,
+    read_delimited,
+    read_prefix,
+)
 
 # ISO8601 UTC with trailing Z — what the golden encoder emits
 # (DelimitedEncoder.swift:30,130-131).
@@ -85,6 +91,26 @@ def _typed_column(
         return F.nullif(F.trim(c), F.lit("")).try_cast("boolean").alias(name)
     # strings: nil round-trips as the empty field (DelimitedEncoder.swift:138)
     return c.alias(name)
+
+
+def typed_projection(
+    schema: AllocSchema, def_time_of_day=None, time_zone=None
+) -> list:
+    """The entity's typed columns over a raw all-string parse, plus the
+    corrupt-record channel: one decode definition for CSV, TSV, JSON and
+    the file-drop stream."""
+    return [
+        _typed_column(f.name, f.dataType, def_time_of_day, time_zone, f.nullable)
+        for f in ENTITY_SCHEMAS[schema].fields
+    ] + [CORRUPT_COL]
+
+
+def required_keys(schema: AllocSchema) -> list[str]:
+    """Key columns a row must carry: the schema's non-nullable keys (the
+    ``T(from:)`` validation step); nullable key parts like
+    MTransaction.lotID may be absent without rejecting the row."""
+    struct = ENTITY_SCHEMAS[schema]
+    return [k for k in ENTITY_KEYS[schema] if not struct[k].nullable]
 
 
 class AllocDataImporter(Importer):
@@ -135,56 +161,29 @@ class AllocDataImporter(Importer):
         else:
             raise TargetSchemaNotSupported(self.output_schemas)
         fmt = input_format or AllocFormat.CSV
-        struct = ENTITY_SCHEMAS[schema]
         if fmt is AllocFormat.JSON:
             # JSON lines (what FINporter.export(.JSON) array elements and
             # Spark's json sink both carry): read every field as string,
-            # then the SAME typed projection as the delimited path —
-            # one decode definition across formats
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            raw_schema = StructType(
-                [StructField(n, StringType(), True) for n in struct.names]
-                + [StructField("_corrupt_record", StringType(), True)]
-            )
-            from finporter_spark.sources import read_prefix
-
+            # then the SAME typed projection as the delimited path.
             # FINporter.export(.JSON) writes one array (needs multiLine);
             # Spark's json sink writes JSON lines — sniff the first byte
             is_array = read_prefix(path, 64).lstrip()[:1] == b"["
             raw = (
                 spark.read.option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
+                .option("columnNameOfCorruptRecord", CORRUPT_COL)
                 .option("multiLine", is_array)
-                .schema(raw_schema)
+                .schema(raw_schema(ENTITY_SCHEMAS[schema].names))
                 .json(path)
             )
         else:
-            raw = read_delimited(
-                spark, path, delimiter=fmt.delimiter or ",", all_string=True
-            )
+            raw = read_delimited(spark, path, fmt.delimiter or ",")
         typed = raw.select(
-            *[
-                _typed_column(
-                    f.name, f.dataType, def_time_of_day, time_zone, f.nullable
-                )
-                for f in struct.fields
-            ],
-            "_corrupt_record",
+            *typed_projection(schema, def_time_of_day, time_zone)
         )
-        # required = the schema's non-nullable fields (the ``T(from:)``
-        # validation step): nullable key parts like MTransaction.lotID may
-        # be absent without rejecting the row
-        return quarantine_split(
-            typed,
-            required_keys=[
-                k for k in ENTITY_KEYS[schema] if not struct[k].nullable
-            ],
-        )
+        return quarantine_split(typed, required_keys(schema))
 
     def _sniff_schema(self, path: str) -> AllocSchema:
         from finporter_spark.errors import DecodingError
-        from finporter_spark.sources import read_prefix
 
         det = self.detect(read_prefix(path))
         if len(det) != 1:
@@ -232,7 +231,7 @@ class BrokerTransactionsImporter(Importer):
     ) -> tuple[DataFrame, DataFrame]:
         if output_schema not in (None, AllocSchema.TRANSACTION):
             raise TargetSchemaNotSupported(self.output_schemas)
-        raw = read_delimited(spark, path, all_string=True)
+        raw = read_delimited(spark, path)
         typed = raw.select(
             F.upper("Action").alias("action"),
             parse_timestamp(
@@ -249,7 +248,7 @@ class BrokerTransactionsImporter(Importer):
             ),
             F.lit(None).cast("double").alias("realizedGainShort"),
             F.lit(None).cast("double").alias("realizedGainLong"),
-            "_corrupt_record",
+            CORRUPT_COL,
         )
         # validate BEFORE numbering: rejected rows must not consume
         # surrogate numbers (they'd leave gaps and make IDs depend on how

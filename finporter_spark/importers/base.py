@@ -54,6 +54,9 @@ class Importer:
         time_zone: str | None = None,
         timestamp=None,
     ) -> tuple[DataFrame, DataFrame]:
+        """``(decoded_df, rejected_df)`` as lazy plans. Decode launches no
+        Spark job: anything it needs from the file (header names, format
+        sniffs) comes from a driver-side read of the head of one file."""
         raise NotImplementedError_()
 
     def export(self, df: DataFrame, fmt: AllocFormat, schema: AllocSchema | None = None):

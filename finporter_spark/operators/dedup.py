@@ -658,6 +658,10 @@ def connected_components(
     would provide this wholesale, but a few DataFrame rounds keep it
     dependency-free and the shuffle pattern explicit.
 
+    Raises ``ValueError`` for ``max_iter < 1`` and ``RuntimeError`` when
+    the last of ``max_iter`` rounds still changed a label: unconverged
+    labels must never come back silently.
+
     Label state is localCheckpointed (not cached) per round: an
     iterative plan that only caches still GROWS its logical tree every
     round — each analysis re-walks the whole join-on-join history, and
@@ -671,6 +675,8 @@ def connected_components(
     version paid, with the round count and the convergence criterion
     unchanged.
     """
+    if max_iter < 1:
+        raise ValueError(f"connected_components: max_iter={max_iter} < 1")
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionAll(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -712,11 +718,10 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    if max_iter < 1:
-        # zero-round path: no changed-count job ran, so the lazily
-        # checkpointed labels are not yet materialized — force them
-        # while the edge cache is still alive, or the caller's first
-        # action re-scans edges uncached
-        labels.count()
     edges.unpersist()
+    if changed:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds — they would be wrong"
+        )
     return labels.select(F.col("id"), F.col("label").alias("cluster"))

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from finporter_spark.model import AllocSchema, ENTITY_SCHEMAS
+from finporter_spark.model import AllocFormat, AllocSchema, ENTITY_SCHEMAS
 
 try:
     from zoneinfo import ZoneInfo
@@ -45,20 +45,16 @@ except ImportError:  # pragma: no cover
 
 
 def _detect_schema(path: str) -> tuple[AllocSchema, list[str]]:
-    """Header-match the first CSV file in ``path`` against the 7 declared
-    entity headers (driver-side prefix read, detect contract)."""
-    files = _list_files(path)
-    if not files:
-        raise FileNotFoundError(path)
-    with open(files[0], "rb") as f:
-        prefix = f.read(4096)
-    first = prefix.decode("utf-8", "replace").replace("\r\n", "\n").split(
-        "\n", 1
-    )[0].strip()
-    for schema in AllocSchema:
-        if first == ",".join(ENTITY_SCHEMAS[schema].names):
-            return schema, files
-    raise ValueError(f"no entity header matches {first!r}")
+    """The entity whose CSV header the first file in ``path`` carries —
+    ``AllocDataImporter.detect`` over the driver-side prefix."""
+    from finporter_spark.importers.allocdata import AllocDataImporter
+    from finporter_spark.sources import read_prefix
+
+    prefix = read_prefix(path)
+    for schema, fmts in AllocDataImporter().detect(prefix).items():
+        if AllocFormat.CSV in fmts:
+            return schema, _list_files(path)
+    raise ValueError(f"no entity CSV header matches {prefix[:200]!r}")
 
 
 def _list_files(path: str) -> list[str]:

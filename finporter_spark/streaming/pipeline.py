@@ -498,41 +498,20 @@ def stream_transform(
     two execution modes. Returns the StreamingQuery; availableNow drains
     the current drop folder and stops.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from finporter_spark.encoder import to_delimited_lines
-    from finporter_spark.importers.allocdata import _typed_column
+    from finporter_spark.importers.allocdata import (
+        required_keys,
+        typed_projection,
+    )
     from finporter_spark.model import ENTITY_SCHEMAS
+    from finporter_spark.sources import CORRUPT_COL, rejected, scan_delimited
 
-    struct = ENTITY_SCHEMAS[schema]
-    raw_schema = StructType(
-        [StructField(n, StringType(), True) for n in struct.names]
-        + [StructField("_corrupt_record", StringType(), True)]
-    )
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(in_dir)
-    )
-    typed = raw.select(
-        *[
-            _typed_column(
-                f.name, f.dataType, def_time_of_day, time_zone, f.nullable
-            )
-            for f in struct.fields
-        ],
-        "_corrupt_record",
-    )
-    import pyspark.sql.functions as F
-
-    reject = F.col("_corrupt_record").isNotNull()
-    for f in struct.fields:
-        if not f.nullable:
-            reject = reject | F.col(f.name).isNull()
-    good = typed.filter(~reject).drop("_corrupt_record")
-    lines = to_delimited_lines(good, ",", struct.names)
+    # declared names, not the header: the folder may be empty at start
+    names = ENTITY_SCHEMAS[schema].names
+    raw = scan_delimited(spark.readStream, in_dir, names)
+    typed = raw.select(*typed_projection(schema, def_time_of_day, time_zone))
+    good = typed.filter(~rejected(required_keys(schema))).drop(CORRUPT_COL)
+    lines = to_delimited_lines(good, ",", names)
     writer = (
         lines.writeStream.format("text")
         .option("path", out_dir)

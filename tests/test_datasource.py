@@ -84,7 +84,7 @@ def test_quarantine_cache_released_after_transform(spark, tmp_path):
 
     p = tmp_path / "a.csv"
     p.write_text("strategyID,title\ns1,Sixty Forty\ns2,All Weather\n")
-    raw = read_delimited(spark, str(p), all_string=True)
+    raw = read_delimited(spark, str(p))
     good, bad = quarantine_split(raw, required_keys=["strategyID"])
     cached = getattr(good, _ATTR)
     assert cached, "corrupt-channel decode should tag its cache"

@@ -295,6 +295,22 @@ def test_connected_components_chain_and_islands(spark):
                    20: 20, 21: 20, 22: 20, 23: 20}
 
 
+def test_connected_components_refuses_unconverged_labels(spark):
+    """A chain longer than max_iter rounds can propagate is an error, not
+    a silently wrong clustering; max_iter < 1 is refused up front."""
+    from finporter_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_l long, id_r long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(chain, max_iter=3)
+    with pytest.raises(ValueError):
+        connected_components(chain, max_iter=0)
+    got = {r.cluster for r in connected_components(chain, max_iter=13).collect()}
+    assert got == {0}
+
+
 def test_lsh_knn_symmetric_join_matches_broadcast(spark, sf_dir):
     """broadcast_queries=False (batch-against-batch contract) takes the
     symmetric shuffled bucket join and returns identical results."""

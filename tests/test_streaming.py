@@ -199,36 +199,47 @@ def test_x4_watermark_drops_late_rows(spark, tmp_path):
 def test_stream_transform_matches_batch_decode(spark, tmp_path):
     """X1 over the real importer pipeline: a file-drop stream decoded with
     the SAME expressions as batch produces the same golden export lines,
-    and rejects are filtered identically."""
+    and hostile rows are rejected or kept identically: a ragged row and
+    an empty required timestamp are rejected, an unparsable double decodes
+    to an empty field."""
     from finporter_spark.encoder import to_delimited_lines
     from finporter_spark.importers.allocdata import AllocDataImporter
     from finporter_spark.model import AllocSchema, ENTITY_SCHEMAS
     from finporter_spark.streaming.pipeline import stream_transform
 
+    names = ENTITY_SCHEMAS[AllocSchema.TRANSACTION].names
+    header = ",".join(names) + "\n"
     drop = tmp_path / "drop"
     drop.mkdir()
     (drop / "f1.csv").write_text(
-        "strategyID,title\nstrat1,60/40\nstrat2,All Weather\n"
+        header
+        + "BUY,2021-03-01T00:00:00Z,acc1,VTI,,3.0,220.1,,,T1\n"
+        + "SELL,2021-03-02T00:00:00Z,acc1,BND\n"  # ragged
     )
-    (drop / "f2.csv").write_text("strategyID,title\nstrat3,Golden Butterfly\n")
+    (drop / "f2.csv").write_text(
+        header
+        + "BUY,,acc1,VTI,,1.0,1.0,,,T3\n"  # empty required transactedAt
+        + "BUY,2021-03-03T00:00:00Z,acc2,VTI,,abc,220.1,,,T4\n"
+        + "DIV,2021-03-04T00:00:00Z,acc2,BND,lot1,2.5,1.0,0.5,-0.25,T5\n"
+    )
 
     out = str(tmp_path / "out")
     q = stream_transform(
-        spark, str(drop), out, str(tmp_path / "cp"), AllocSchema.STRATEGY
+        spark, str(drop), out, str(tmp_path / "cp"), AllocSchema.TRANSACTION
     )
     q.awaitTermination(120)
 
     got = sorted(r.value for r in spark.read.text(out).collect())
-    good, _ = AllocDataImporter().decode(
-        spark, str(drop), output_schema=AllocSchema.STRATEGY
+    good, bad = AllocDataImporter().decode(
+        spark, str(drop), output_schema=AllocSchema.TRANSACTION
     )
     want = sorted(
-        r.line
-        for r in to_delimited_lines(
-            good, ",", ENTITY_SCHEMAS[AllocSchema.STRATEGY].names
-        ).collect()
+        r.line for r in to_delimited_lines(good, ",", names).collect()
     )
-    assert got == want and len(got) == 3
+    assert got == want
+    assert [line.split(",")[-1] for line in got] == ["T1", "T4", "T5"]
+    assert got[1].split(",")[5] == ""  # unparsable shareCount
+    assert bad.count() == 2
 
 
 def test_x6_stateful_totals_equal_batch(spark, sf_dir):
